@@ -33,11 +33,12 @@ Each policy exists in two forms:
 
 Scale notes: every merge shuffles only on the PK columns; incoming
 batches are monthly (small vs the accumulated table) so AQE broadcasts
-the anti-join side. The physical Parquet writers rewrite the table
-(or, for K4, only the affected period partitions via dynamic partition
-overwrite) — at 100 TB the table would be Delta/Iceberg and K2/K3
-become metadata-only MERGEs; the logical operators here are exactly
-the MERGE condition/action set.
+the anti-join side. The physical K2 writer is append-only: it writes
+just the fresh rows as new files and never touches the existing ones.
+K3 rewrites the table, and K4 only the affected period partitions (via
+dynamic partition overwrite) — at 100 TB the table would be
+Delta/Iceberg and K3 a metadata-only MERGE; the logical operators here
+are exactly the MERGE condition/action set.
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ from __future__ import annotations
 import functools
 from collections.abc import Mapping, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -186,9 +188,10 @@ def overwrite(existing: DataFrame, incoming: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Physical Parquet writers. On Delta/Iceberg these become MERGE INTO /
-# dynamic overwrite; on plain Parquet K2/K3 must rewrite the table, so
-# they write to a fresh directory (write-then-swap keeps readers
-# consistent; the swap is the storage layer's atomic rename).
+# dynamic overwrite. On plain Parquet, K2 only adds files (an append
+# never rewrites or deletes what is already there); K3 must rewrite the
+# table, so it pins the merged rows before overwriting the directory
+# they were read from.
 # ---------------------------------------------------------------------------
 
 
@@ -198,15 +201,39 @@ def write_append_nodup(
     path: str,
     pk: Sequence[str],
     defaults: Mapping[str, Column] | None = None,
-) -> None:
-    """K2 against a Parquet table dir (creates it if absent)."""
+) -> int:
+    """K2 against a Parquet table dir (creates it if absent).
+
+    Append-only: the fresh rows are pinned, counted, and appended as new
+    files cast to the table's column types; existing files are never
+    rewritten, and a batch with nothing new writes nothing. Returns the
+    number of rows inserted.
+    """
     try:
         existing = spark.read.parquet(path)
-    except Exception:
-        _dedup_incoming(incoming, pk).write.mode("overwrite").parquet(path)
-        return
-    merged = append_ignore_conflicts(existing, incoming, pk, defaults)
-    _rewrite(spark, merged, path)
+    except AnalysisException:
+        existing = None
+    if existing is None:
+        fresh = _dedup_incoming(incoming, pk)
+    else:
+        # the insert set of append_ignore_conflicts (J5 anti-join on the
+        # PK), cast to the table's column types
+        extra = set(incoming.columns) - set(existing.columns)
+        if extra:
+            raise ValueError(f"incoming has columns not in target: {sorted(extra)}")
+        fresh = _dedup_incoming(incoming, pk).join(
+            existing.select(*pk), list(pk), "left_anti"
+        )
+        fresh = _align_to(fresh, existing, defaults).select(
+            *[F.col(f.name).cast(f.dataType) for f in existing.schema.fields]
+        )
+    # the lazy checkpoint is filled by the count, and the append then
+    # reads the pinned rows instead of re-running the anti-join
+    pinned = fresh.localCheckpoint(eager=False)
+    n = pinned.count()
+    if n or existing is None:
+        pinned.write.mode("append").parquet(path)
+    return n
 
 
 def write_upsert(
@@ -222,8 +249,7 @@ def write_upsert(
     except Exception:
         _dedup_incoming(incoming, pk).write.mode("overwrite").parquet(path)
         return
-    merged = upsert(existing, incoming, pk, defaults)
-    _rewrite(spark, merged, path)
+    rewrite(upsert(existing, incoming, pk, defaults), path)
 
 
 def write_replace_period(
@@ -253,15 +279,14 @@ def write_overwrite(incoming: DataFrame, path: str) -> None:
     incoming.write.mode("overwrite").parquet(path)
 
 
-def _rewrite(spark: SparkSession, merged: DataFrame, path: str) -> None:
+def rewrite(merged: DataFrame, path: str) -> None:
     """Materialize merged state, then overwrite the table dir.
 
     The merged plan reads ``path`` itself, so a direct overwrite would
     delete its own input mid-scan; localCheckpoint pins the merged
     rows first. (A lakehouse table format makes this a metadata swap.)
     """
-    pinned = merged.localCheckpoint(eager=True)
-    pinned.write.mode("overwrite").parquet(path)
+    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
 
 def scd2_merge(

@@ -18,11 +18,16 @@ Mirrors ``/root/reference/autosinapi/etl_pipeline.py:426-510``:
   repair (etl_pipeline.py:287-338).
 - **Fase 3** load, order-critical (etl_pipeline.py:340-380): catalogs
   UPSERT -> structure OVERWRITE -> monthly facts APPEND-nodup with the
-  reference-date stamp (``:374``), then maintenance-driven status sync
-  (etl_pipeline.py:399-423).
+  reference-date stamp (``:374``). The reference's final
+  maintenance-driven status sync (etl_pipeline.py:399-423) is folded
+  into the catalog write: it reads only the catalog and the month's
+  maintenance log, never the facts, so applying it to the upserted
+  frame before the one save leaves the same final state.
 
 Every load goes through the K2/K3/K5 sink operators, so PK and
-column-subset semantics match PostgreSQL ON CONFLICT behaviour.
+column-subset semantics match PostgreSQL ON CONFLICT behaviour. Each
+table is written once per run, and the fact tables only gain files:
+the K2 writer appends the new rows and never rewrites the history.
 """
 
 from __future__ import annotations
@@ -42,7 +47,7 @@ from .functions.coercion import (
     upper_trim,
 )
 from .operators.dedup import dedup_keep_first
-from .operators.sinks import append_ignore_conflicts, upsert, write_overwrite
+from .operators.sinks import rewrite, upsert, write_append_nodup, write_overwrite
 from .schemas import SINAPI_SCHEMAS
 from .sources.csv_source import read_discovered_csv
 
@@ -124,11 +129,6 @@ class SinapiPipeline:
             if not os.path.exists(self.path(name)):
                 empty = self.spark.createDataFrame([], schema)
                 empty.write.mode("overwrite").parquet(self.path(name))
-
-    def _save(self, table: str, merged: DataFrame) -> int:
-        pinned = merged.localCheckpoint(eager=True)
-        pinned.write.mode("overwrite").parquet(self.path(table))
-        return pinned.count()
 
     # -- Fase 2: transforms ------------------------------------------------
     def process_manutencoes(self, csv_path: str) -> DataFrame:
@@ -273,20 +273,27 @@ class SinapiPipeline:
         return insumo_edges, sub_edges, details
 
     # -- Fase 3: loads -------------------------------------------------------
-    def _upsert_catalog(self, table: str, catalog: DataFrame) -> int:
-        existing = self.read(table)
-        incoming = catalog.select("codigo", "descricao", "unidade")
-        merged = upsert(
-            existing,
-            incoming,
-            ["codigo"],
-            defaults={"status": F.lit(self.cfg.DEFAULT_ITEM_STATUS)},
-        )
-        return self._save(table, merged)
+    def _upsert_catalog(
+        self, table: str, catalog: DataFrame | None, manut: DataFrame, tipo: str
+    ) -> None:
+        """K3 upsert of the sheet catalog, status-synced, saved once.
+        Without a sheet catalog the stored one is only status-synced."""
+        merged = self.read(table)
+        if catalog is not None:
+            merged = upsert(
+                merged,
+                catalog.select("codigo", "descricao", "unidade"),
+                ["codigo"],
+                defaults={"status": F.lit(self.cfg.DEFAULT_ITEM_STATUS)},
+            )
+        rewrite(self._sync_status(merged, manut, tipo), self.path(table))
 
-    def _sync_status(self, table: str, manut: DataFrame, tipo: str) -> None:
+    def _sync_status(
+        self, catalog: DataFrame, manut: DataFrame, tipo: str
+    ) -> DataFrame:
         """J4+W1: latest maintenance event decides ATIVO/DESATIVADO
-        (etl_pipeline.py:399-423)."""
+        (etl_pipeline.py:399-423); items without an event this month
+        keep their status."""
         w = Window.partitionBy("item_codigo").orderBy(
             F.desc("data_referencia"), F.desc("tipo_manutencao")
         )
@@ -304,18 +311,14 @@ class SinapiPipeline:
                 .alias("__new_status"),
             )
         )
-        cat = self.read(table)
-        synced = cat.join(latest, "codigo", "left").select(
-            *[c for c in cat.columns if c != "status"],
+        synced = catalog.join(latest, "codigo", "left").select(
+            *[c for c in catalog.columns if c != "status"],
             F.coalesce("__new_status", "status").alias("status"),
         )
-        self._save(table, synced.select(*cat.columns))
+        return synced.select(*catalog.columns)
 
     def _append_facts(self, table: str, facts: DataFrame, pk: list[str]) -> int:
-        existing = self.read(table)
-        before = existing.count()
-        merged = append_ignore_conflicts(existing, facts, pk)
-        return self._save(table, merged) - before
+        return write_append_nodup(self.spark, facts, self.path(table), pk)
 
     def run(
         self,
@@ -417,13 +420,16 @@ class SinapiPipeline:
                 comp_cat.unionByName(missing_comp), ["codigo"], ["descricao"]
             )
 
-        # Fase 3 load order: catalogs UPSERT first (FK targets), then
-        # structure OVERWRITE, then monthly facts APPEND
+        # Fase 3 load order: catalogs UPSERT first (FK targets, status
+        # synced in the same write, also when the month has no sheets
+        # for them), then structure OVERWRITE, then monthly facts APPEND
+        self._upsert_catalog("insumos", insumo_cat, manut, self.cfg.ITEM_TYPE_INSUMO)
         if insumo_cat is not None:
-            self._upsert_catalog("insumos", insumo_cat)
             res.tables_updated.append("insumos")
+        self._upsert_catalog(
+            "composicoes", comp_cat, manut, self.cfg.ITEM_TYPE_COMPOSICAO
+        )
         if comp_cat is not None:
-            self._upsert_catalog("composicoes", comp_cat)
             res.tables_updated.append("composicoes")
 
         write_overwrite(
@@ -460,8 +466,4 @@ class SinapiPipeline:
             )
             res.tables_updated.append("custos_composicoes_mensal")
             res.records_inserted["custos_composicoes_mensal"] = n
-
-        # status sync last (needs the upserted catalogs in place)
-        self._sync_status("insumos", manut, self.cfg.ITEM_TYPE_INSUMO)
-        self._sync_status("composicoes", manut, self.cfg.ITEM_TYPE_COMPOSICAO)
         return res.as_dict()

@@ -4,7 +4,8 @@ The reference reads SINAPI sheets as headerless CSV and locates the
 header by keyword scan (``processor.py:352-380``). Here the discovery
 is a bounded driver-side pre-scan (first ~22 lines through Python's
 csv module), and the DATA read is a fully distributed
-``spark.read.csv`` with the discovered names applied positionally.
+``spark.read.csv`` with the discovered names applied positionally as an
+all-string schema.
 
 Pre-header junk rows cannot be dropped by position in a distributed
 scan (row order across partitions is undefined), and don't need to
@@ -21,6 +22,7 @@ import io
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .normalize import (
     HEADER_SEARCH_LIMIT,
@@ -73,8 +75,10 @@ def read_discovered_csv(
         standardize_id_names([normalize_name(n) for n in raw_names])
     )
 
-    df = spark.read.csv(path, sep=sep, header=False, inferSchema=False)
-    n_file_cols = len(df.columns)
-    if n_file_cols > len(names):
-        names = names + [f"COL_{i}" for i in range(len(names), n_file_cols)]
-    return df.toDF(*names[:n_file_cols])
+    # an explicit schema fixes the width up front: Spark would otherwise
+    # take it from the first physical line (a narrow preamble truncates
+    # every row) and fire a job to read that line
+    width = max(len(names), *(len(r) for r in sample))
+    names = names + [f"COL_{i}" for i in range(len(names), width)]
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return spark.read.csv(path, schema=schema, sep=sep, header=False)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.sinks import append_ignore_conflicts
+from ..operators.sinks import write_append_nodup
 
 
 def incremental_append_available_now(
@@ -49,16 +49,7 @@ def incremental_append_available_now(
     """Drain the landing dir into the table, idempotently, then stop."""
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
-        s = batch.sparkSession
-        try:
-            existing = s.read.parquet(table_path)
-        except Exception:
-            deduped = batch.dropDuplicates(list(pk))
-            deduped.write.mode("overwrite").parquet(table_path)
-            return
-        merged = append_ignore_conflicts(existing, batch, pk)
-        pinned = merged.localCheckpoint(eager=True)
-        pinned.write.mode("overwrite").parquet(table_path)
+        write_append_nodup(batch.sparkSession, batch, table_path, pk)
 
     stream = (
         spark.readStream.schema(schema).format(fmt).load(landing_dir)

@@ -8,9 +8,12 @@ the same startrow-offset pattern as the reference's own processor test
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from autosinapi_spark.pipeline import SinapiPipeline
+from autosinapi_spark.schemas import SINAPI_SCHEMAS
 
 PRECOS_CSV = """SINAPI - PREÇOS DE INSUMOS - JANEIRO/2024;;;;;
 Encargos: não desonerado;;;;;
@@ -58,10 +61,10 @@ def csv_dir(tmp_path):
     return tmp_path
 
 
-def _run(spark, csv_dir, warehouse):
-    pipe = SinapiPipeline(spark, str(warehouse), 2024, 1)
+def _run(spark, csv_dir, warehouse, month=1, manut="SINAPI_Manutencoes.csv"):
+    pipe = SinapiPipeline(spark, str(warehouse), 2024, month)
     return pipe, pipe.run(
-        manutencoes_csv=str(csv_dir / "SINAPI_Manutencoes.csv"),
+        manutencoes_csv=str(csv_dir / manut),
         precos_csvs={"NAO_DESONERADO": str(csv_dir / "SINAPI_Precos_ISD.csv")},
         custos_csvs={"NAO_DESONERADO": str(csv_dir / "SINAPI_Custos_CSD.csv")},
         estrutura_csv=str(csv_dir / "SINAPI_Analitico.csv"),
@@ -143,6 +146,143 @@ def test_monthly_rerun_is_idempotent(spark, csv_dir, tmp_path):
     assert second["records_inserted"]["manutencoes_historico"] == 0
     assert pipe.read("insumos").count() == 4
     assert pipe.read("precos_insumos_mensal").count() == 7
+
+
+def _assert_same_tables(spark, wh_a, wh_b):
+    for table in SINAPI_SCHEMAS:
+        a = spark.read.parquet(str(wh_a / table))
+        b = spark.read.parquet(str(wh_b / table))
+        assert a.exceptAll(b).count() == 0, table
+        assert b.exceptAll(a).count() == 0, table
+
+
+def test_rerun_after_partial_failure_matches_clean_run(
+    spark, csv_dir, tmp_path, monkeypatch
+):
+    """Kill the load after the maintenance log, the catalogs, the
+    structure and one fact table are written; a re-run of the month
+    must leave every table equal to a clean single run."""
+    _, clean = _run(spark, csv_dir, tmp_path / "clean")
+
+    real = SinapiPipeline._append_facts
+    calls = []
+
+    def fail_second(self, table, facts, pk):
+        calls.append(table)
+        if len(calls) == 2:
+            raise RuntimeError(f"injected failure before {table}")
+        return real(self, table, facts, pk)
+
+    wh = tmp_path / "wh"
+    monkeypatch.setattr(SinapiPipeline, "_append_facts", fail_second)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        _run(spark, csv_dir, wh)
+    monkeypatch.undo()
+    assert calls == ["manutencoes_historico", "precos_insumos_mensal"]
+
+    _, rerun = _run(spark, csv_dir, wh)
+    _assert_same_tables(spark, wh, tmp_path / "clean")
+    # the log landed before the failure; everything else lands now
+    assert rerun["records_inserted"] == {
+        **clean["records_inserted"],
+        "manutencoes_historico": 0,
+    }
+
+
+FACT_TABLES = (
+    "manutencoes_historico",
+    "precos_insumos_mensal",
+    "custos_composicoes_mensal",
+)
+
+
+def _fact_files(wh):
+    out = {}
+    for table in FACT_TABLES:
+        d = wh / table
+        for name in os.listdir(d):
+            if name.endswith(".parquet"):
+                out[str(d / name)] = os.path.getsize(d / name)
+    return out
+
+
+def test_second_month_appends_without_rewriting_history(spark, csv_dir, tmp_path):
+    """Month 2 adds fact files and leaves month 1's untouched; its
+    DESATIVAÇÃO event flips only that item's status."""
+    (csv_dir / "manut_02.csv").write_text(
+        MANUT_CSV.split("01/2024")[0]
+        + "02/2024;INSUMO;102;Areia média;DESATIVAÇÃO\n",
+        encoding="utf-8",
+    )
+    wh = tmp_path / "wh"
+    _run(spark, csv_dir, wh)
+    month1 = _fact_files(wh)
+    pipe, second = _run(spark, csv_dir, wh, month=2, manut="manut_02.csv")
+
+    month2 = _fact_files(wh)
+    assert {p: month2.get(p) for p in month1} == month1
+    assert len(month2) > len(month1)
+    assert second["records_inserted"] == {
+        "manutencoes_historico": 1,
+        "precos_insumos_mensal": 7,
+        "custos_composicoes_mensal": 3,
+    }
+    assert pipe.read("precos_insumos_mensal").count() == 14
+
+    status = {r["codigo"]: r["status"] for r in pipe.read("insumos").collect()}
+    assert status == {
+        101: "ATIVO",
+        102: "DESATIVADO",  # month 2's event
+        103: "DESATIVADO",  # month 1's event, no new one
+        104: "ATIVO",
+    }
+    comps = {r["codigo"]: r["status"] for r in pipe.read("composicoes").collect()}
+    assert comps == {9001: "ATIVO", 9002: "DESATIVADO"}
+
+
+def test_month_without_sheets_still_syncs_status(spark, csv_dir, tmp_path):
+    """A month loaded with no price or cost sheets writes no catalog
+    rows, but its maintenance events still set the stored statuses."""
+    (csv_dir / "manut_02.csv").write_text(
+        MANUT_CSV.split("01/2024")[0]
+        + "02/2024;INSUMO;102;Areia média;DESATIVAÇÃO\n"
+        + "02/2024;COMPOSICAO;9001;Alvenaria;DESATIVAÇÃO\n",
+        encoding="utf-8",
+    )
+    wh = tmp_path / "wh"
+    _run(spark, csv_dir, wh)
+    pipe = SinapiPipeline(spark, str(wh), 2024, 2)
+    result = pipe.run(
+        manutencoes_csv=str(csv_dir / "manut_02.csv"),
+        precos_csvs={},
+        custos_csvs={},
+        estrutura_csv=str(csv_dir / "SINAPI_Analitico.csv"),
+    )
+    assert result["records_inserted"] == {"manutencoes_historico": 2}
+    status = {r["codigo"]: r["status"] for r in pipe.read("insumos").collect()}
+    assert status == {
+        101: "ATIVO",
+        102: "DESATIVADO",
+        103: "DESATIVADO",
+        104: "ATIVO",
+    }
+    comps = {r["codigo"]: r["status"] for r in pipe.read("composicoes").collect()}
+    assert comps == {9001: "DESATIVADO", 9002: "DESATIVADO"}
+
+
+def test_narrow_preamble_keeps_every_column(spark, tmp_path):
+    """A preamble line narrower than the header must not cut the data
+    rows to its width (Spark would take the width from line one)."""
+    narrow = tmp_path / "narrow.csv"
+    narrow.write_text(
+        "SINAPI - PREÇOS;\n" + PRECOS_CSV.split("\n", 1)[1], encoding="utf-8"
+    )
+    pipe = SinapiPipeline(spark, str(tmp_path / "wh"), 2024, 1)
+    _, long = pipe.process_precos(str(narrow), "NAO_DESONERADO")
+    assert {(r["insumo_codigo"], r["uf"]) for r in long.collect()} == {
+        (101, "SP"), (101, "RJ"), (102, "SP"), (102, "MG"),
+        (103, "SP"), (103, "RJ"), (103, "MG"),
+    }
 
 
 def test_header_not_found_raises(spark, tmp_path):

@@ -36,13 +36,17 @@ def _state(spark, path):
     }
 
 
+def _files(path):
+    return {n: os.path.getsize(os.path.join(path, n)) for n in os.listdir(path)}
+
+
 def test_append_nodup_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "catalogo")
     first = _catalog(spark, [(1, "A", "UN", "ATIVO"), (2, "B", "KG", "ATIVO")])
-    write_append_nodup(spark, first, path, ["codigo"])
+    assert write_append_nodup(spark, first, path, ["codigo"]) == 2
 
     again = _catalog(spark, [(2, "B2", "M", "ATIVO"), (3, "C", "UN", "ATIVO")])
-    write_append_nodup(spark, again, path, ["codigo"])
+    assert write_append_nodup(spark, again, path, ["codigo"]) == 1
 
     st = _state(spark, path)
     assert st == {
@@ -51,8 +55,10 @@ def test_append_nodup_is_idempotent(spark, tmp_path):
         3: ("C", "UN", "ATIVO"),
     }
     # true idempotence: replaying the same batch changes nothing
-    write_append_nodup(spark, again, path, ["codigo"])
+    files = _files(path)
+    assert write_append_nodup(spark, again, path, ["codigo"]) == 0
     assert _state(spark, path) == st
+    assert _files(path) == files  # a no-op append writes no file
 
 
 def test_upsert_updates_only_incoming_columns(spark, tmp_path):
