@@ -243,10 +243,15 @@ def write_upsert(
     pk: Sequence[str],
     defaults: Mapping[str, Column] | None = None,
 ) -> None:
-    """K3 against a Parquet table dir (creates it if absent)."""
+    """K3 against a Parquet table dir (creates it if absent).
+
+    Only a missing table counts as absent: any other read failure (a
+    torn file, say) propagates, so the table is never overwritten with
+    the incoming rows alone.
+    """
     try:
         existing = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException:
         _dedup_incoming(incoming, pk).write.mode("overwrite").parquet(path)
         return
     rewrite(upsert(existing, incoming, pk, defaults), path)

@@ -28,6 +28,17 @@ Every load goes through the K2/K3/K5 sink operators, so PK and
 column-subset semantics match PostgreSQL ON CONFLICT behaviour. Each
 table is written once per run, and the fact tables only gain files:
 the K2 writer appends the new rows and never rewrites the history.
+
+Each run does its shared work once:
+
+- one dedup per catalog: the sheets' catalog rows and the placeholder
+  rows reach the K3 upsert undeduped, and its incoming dedup (least
+  ``descricao, unidade`` per ``codigo``) is the only one;
+- the maintenance log and the Analítico edges, which several writes
+  read, are pinned, so each is parsed and deduped once per run; ``run``
+  releases them when it returns, also on failure;
+- the UF unpivot is one ``stack`` expression, so building a sheet's
+  plan does not grow with the number of UF columns.
 """
 
 from __future__ import annotations
@@ -35,7 +46,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import EngineConfig
@@ -58,16 +69,46 @@ def _uf_cols(df: DataFrame) -> list[str]:
     return [c for c in df.columns if len(c) == 2 and c.isalpha()]
 
 
-def _unpivot_uf(df: DataFrame, id_cols: list[str], value_name: str) -> DataFrame:
+def _quote(name: str) -> str:
+    """Backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _unpivot_uf(
+    df: DataFrame,
+    code_col: str,
+    uf_cols: dict[str, str],
+    value_name: str,
+    source: str,
+) -> DataFrame:
     """R1 signature transform: UF columns -> (uf, value) rows, null
-    values dropped BEFORE coercion (processor.py:134-158)."""
-    ufs = _uf_cols(df)
-    long = df.unpivot(id_cols, ufs, "uf", "__txt").where(
-        F.col("__txt").isNotNull()
+    values dropped BEFORE coercion (processor.py:134-158).
+
+    ``uf_cols`` maps each UF to the sheet column that holds its values.
+    The unpivot is one ``stack`` expression string, so the plan costs
+    the same few py4j calls for a 3-UF sheet as for a 27-UF one.
+    """
+    if not uf_cols:
+        raise ValueError(f"no UF value columns in {source}")
+    pairs = ", ".join(f"'{uf}', {_quote(c)}" for uf, c in uf_cols.items())
+    return (
+        df.selectExpr(
+            _quote(code_col), f"stack({len(uf_cols)}, {pairs}) AS (uf, __txt)"
+        )
+        .where(F.col("__txt").isNotNull())
+        .select(code_col, "uf", decimal_comma_to_double("__txt").alias(value_name))
     )
-    return long.withColumn(
-        value_name, decimal_comma_to_double("__txt")
-    ).drop("__txt")
+
+
+def _sheet_catalog(typed: DataFrame) -> DataFrame:
+    """A price or cost sheet's catalog rows, one per data row. Not
+    deduped: the catalog upsert's incoming dedup (least ``descricao,
+    unidade`` per ``codigo``) is the one dedup over every sheet."""
+    return typed.select(
+        F.col("CODIGO").alias("codigo"),
+        F.trim("DESCRICAO").alias("descricao"),
+        upper_trim("UNIDADE").alias("unidade"),
+    )
 
 
 @dataclass
@@ -114,13 +155,29 @@ class SinapiPipeline:
             storage={"warehouse": warehouse},
             sinapi={"year": year, "month": month},
         )
+        self._pinned: list[DataFrame] = []
 
     # -- storage ----------------------------------------------------------
     def path(self, table: str) -> str:
         return os.path.join(self.warehouse, table)
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        # the explicit schema spares a schema-inference job per read
+        return self.spark.read.schema(SINAPI_SCHEMAS[table]).parquet(self.path(table))
+
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """Pin a frame that several of this run's writes read, so it is
+        parsed and deduped once; ``run`` releases it when it ends (edges
+        pinned by a ``process_estrutura`` called on its own stay pinned
+        until this pipeline's next ``run`` ends).
+
+        A lazy local checkpoint, not ``persist``: it keeps the partitions
+        AQE coalesced (so the structure tables written from the edges
+        keep their file layout) and needs no job of its own to fill.
+        """
+        pinned = df.localCheckpoint(eager=False)
+        self._pinned.append(pinned)
+        return pinned
 
     def bootstrap(self) -> None:
         """Fase 0: create-if-absent empty tables (no drop — see module
@@ -156,23 +213,16 @@ class SinapiPipeline:
         typed = raw.withColumn("CODIGO", normalize_code("CODIGO")).where(
             F.col("CODIGO").isNotNull()
         )
-        catalog = dedup_keep_first(
-            typed.select(
-                F.col("CODIGO").alias("codigo"),
-                F.trim("DESCRICAO").alias("descricao"),
-                upper_trim("UNIDADE").alias("unidade"),
-            ),
-            ["codigo"],
-            ["descricao", "unidade"],
-        )
-        long = _unpivot_uf(typed, ["CODIGO"], "preco_mediano").select(
+        long = _unpivot_uf(
+            typed, "CODIGO", {uf: uf for uf in _uf_cols(typed)}, "preco_mediano", csv_path
+        ).select(
             F.col("CODIGO").alias("insumo_codigo"),
             "uf",
             F.lit(self.ref_date).cast("date").alias("data_referencia"),
             F.lit(regime).alias("regime"),
             F.col("preco_mediano").cast("decimal(18,4)"),
         )
-        return catalog, long
+        return _sheet_catalog(typed), long
 
     def process_custos(
         self, csv_path: str, regime: str
@@ -186,34 +236,27 @@ class SinapiPipeline:
             "CODIGO",
             extract_code(F.col("CODIGO"), self.cfg.CUSTOS_CODIGO_REGEX),
         ).where(F.col("CODIGO").isNotNull())
-        catalog = dedup_keep_first(
-            typed.select(
-                F.col("CODIGO").alias("codigo"),
-                F.trim("DESCRICAO").alias("descricao"),
-                upper_trim("UNIDADE").alias("unidade"),
-            ),
-            ["codigo"],
-            ["descricao", "unidade"],
-        )
         # cost columns came out of the two-row flatten as '{UF}_CUSTO';
-        # strip the suffix back to the bare UF before the unpivot
-        # (processor.py:394-403)
+        # the unpivot labels each with its bare UF (processor.py:394-403)
         cost_cols = {
             c.split("_")[0]: c
             for c in typed.columns
             if "CUSTO" in c and len(c.split("_")[0]) == 2
         }
-        slim = typed.select(
-            "CODIGO", *[F.col(c).alias(uf) for uf, c in cost_cols.items()]
-        )
-        long = _unpivot_uf(slim, ["CODIGO"], "custo_total").select(
+        long = _unpivot_uf(
+            typed,
+            "CODIGO",
+            {uf: c for uf, c in cost_cols.items() if uf.isalpha()},
+            "custo_total",
+            csv_path,
+        ).select(
             F.col("CODIGO").alias("composicao_codigo"),
             "uf",
             F.lit(self.ref_date).cast("date").alias("data_referencia"),
             F.lit(regime).alias("regime"),
             F.col("custo_total").cast("decimal(18,4)"),
         )
-        return catalog, long
+        return _sheet_catalog(typed), long
 
     def process_estrutura(
         self, csv_path: str
@@ -237,12 +280,16 @@ class SinapiPipeline:
             & F.col("pai_codigo").isNotNull()
             & F.col("item_codigo").isNotNull()
         )
-        edges = dedup_keep_first(
-            children.select(
-                "pai_codigo", "item_codigo", "coeficiente", "tipo_item"
-            ),
-            ["pai_codigo", "item_codigo", "tipo_item"],
-            ["coeficiente"],
+        # pinned: the placeholder repair of both catalogs and both
+        # structure writes read the edges
+        edges = self._pin(
+            dedup_keep_first(
+                children.select(
+                    "pai_codigo", "item_codigo", "coeficiente", "tipo_item"
+                ),
+                ["pai_codigo", "item_codigo", "tipo_item"],
+                ["coeficiente"],
+            )
         )
         insumo_edges = edges.where(F.col("tipo_item") == self.cfg.ITEM_TYPE_INSUMO).select(
             F.col("pai_codigo").alias("composicao_pai_codigo"),
@@ -293,18 +340,22 @@ class SinapiPipeline:
     ) -> DataFrame:
         """J4+W1: latest maintenance event decides ATIVO/DESATIVADO
         (etl_pipeline.py:399-423); items without an event this month
-        keep their status."""
-        w = Window.partitionBy("item_codigo").orderBy(
-            F.desc("data_referencia"), F.desc("tipo_manutencao")
-        )
+        keep their status.
+
+        The latest event is the max of ``(data_referencia,
+        tipo_manutencao)`` per item: struct comparison puts null fields
+        first, so the max is the ``DESC NULLS LAST`` order's first row.
+        """
         latest = (
             manut.where(F.col("tipo_item") == tipo)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
+            .groupBy("item_codigo")
+            .agg(F.max(F.struct("data_referencia", "tipo_manutencao")).alias("__ev"))
             .select(
                 F.col("item_codigo").alias("codigo"),
                 F.when(
-                    F.upper("tipo_manutencao").contains(self.cfg.DEACTIVATION_KEYWORD),
+                    F.upper("__ev.tipo_manutencao").contains(
+                        self.cfg.DEACTIVATION_KEYWORD
+                    ),
                     F.lit("DESATIVADO"),
                 )
                 .otherwise(F.lit("ATIVO"))
@@ -328,12 +379,28 @@ class SinapiPipeline:
         estrutura_csv: str,
     ) -> dict:
         """Full monthly load; returns the reference's result contract
-        (etl_pipeline.py:506-510)."""
+        (etl_pipeline.py:506-510). The frames pinned for the run are
+        released when it returns, also on failure."""
+        try:
+            return self._load(manutencoes_csv, precos_csvs, custos_csvs, estrutura_csv)
+        finally:
+            while self._pinned:
+                # a local checkpoint's blocks belong to the RDD its plan reads
+                self._pinned.pop()._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def _load(
+        self,
+        manutencoes_csv: str,
+        precos_csvs: dict[str, str],
+        custos_csvs: dict[str, str],
+        estrutura_csv: str,
+    ) -> dict:
         res = PipelineResult(status=self.cfg.STATUS_SUCCESS)
         self.bootstrap()
 
-        # maintenance log: K2 append on the 4-column PK
-        manut = self.process_manutencoes(manutencoes_csv)
+        # maintenance log: K2 append on the 4-column PK; pinned, as both
+        # catalog status syncs read it too
+        manut = self._pin(self.process_manutencoes(manutencoes_csv))
         n = self._append_facts(
             "manutencoes_historico",
             manut,
@@ -363,13 +430,15 @@ class SinapiPipeline:
         )
 
         # placeholder repair (J1-J3): codes referenced by the structure
-        # but absent from the sheet catalogs get template rows
+        # but absent from the sheet catalogs get template rows. Their
+        # codes are disjoint from the sheets' by the anti-join and the
+        # repeats of one code are identical rows, so the upsert's own
+        # incoming dedup is the only one the catalogs need
         if insumo_cat is not None:
             missing = (
                 insumo_edges.select(
                     F.col("insumo_filho_codigo").alias("codigo")
                 )
-                .distinct()
                 .join(insumo_cat.select("codigo"), "codigo", "left_anti")
                 .select(
                     "codigo",
@@ -379,9 +448,7 @@ class SinapiPipeline:
                     F.lit(self.cfg.PLACEHOLDER_DEFAULT_UNIT).alias("unidade"),
                 )
             )
-            insumo_cat = dedup_keep_first(
-                insumo_cat.unionByName(missing), ["codigo"], ["descricao"]
-            )
+            insumo_cat = insumo_cat.unionByName(missing)
         comp_cat = custo_cat
         if comp_cat is not None:
             comp_universe = (
@@ -398,7 +465,6 @@ class SinapiPipeline:
                         F.col("composicao_pai_codigo").alias("codigo")
                     )
                 )
-                .distinct()
             )
             missing_comp = (
                 comp_universe.join(
@@ -416,9 +482,7 @@ class SinapiPipeline:
                     F.coalesce("unidade", F.lit(self.cfg.PLACEHOLDER_DEFAULT_UNIT)).alias("unidade"),
                 )
             )
-            comp_cat = dedup_keep_first(
-                comp_cat.unionByName(missing_comp), ["codigo"], ["descricao"]
-            )
+            comp_cat = comp_cat.unionByName(missing_comp)
 
         # Fase 3 load order: catalogs UPSERT first (FK targets, status
         # synced in the same write, also when the month has no sheets

@@ -11,6 +11,9 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from autosinapi_spark.pipeline import SinapiPipeline
 from autosinapi_spark.schemas import SINAPI_SCHEMAS
@@ -189,6 +192,40 @@ def test_rerun_after_partial_failure_matches_clean_run(
     }
 
 
+def test_run_releases_pinned_frames_also_on_failure(
+    spark, csv_dir, tmp_path, monkeypatch
+):
+    """The maintenance log and the Analítico edges are pinned once per
+    run, and released when the run returns or fails."""
+    pinned = []
+    real_pin = SinapiPipeline._pin
+
+    def recording(self, df):
+        pinned.append(real_pin(self, df))
+        return pinned[-1]
+
+    def held(df):
+        return df._jdf.queryExecution().analyzed().rdd().getStorageLevel().isValid()
+
+    monkeypatch.setattr(SinapiPipeline, "_pin", recording)
+    _run(spark, csv_dir, tmp_path / "ok")
+    assert len(pinned) == 2 and not any(held(df) for df in pinned)
+
+    pinned.clear()
+    real_append = SinapiPipeline._append_facts
+
+    def fail_on_prices(self, table, facts, pk):
+        if table == "precos_insumos_mensal":
+            assert all(held(df) for df in pinned)
+            raise RuntimeError("injected failure")
+        return real_append(self, table, facts, pk)
+
+    monkeypatch.setattr(SinapiPipeline, "_append_facts", fail_on_prices)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        _run(spark, csv_dir, tmp_path / "failed")
+    assert len(pinned) == 2 and not any(held(df) for df in pinned)
+
+
 FACT_TABLES = (
     "manutencoes_historico",
     "precos_insumos_mensal",
@@ -322,3 +359,184 @@ def test_custom_constants_wire_into_transforms(spark, csv_dir, tmp_path):
         str(csv_dir / "SINAPI_Custos_CSD.csv"), "NAO_DESONERADO"
     )
     assert {r["codigo"] for r in cat.collect()} == {9}
+
+
+def test_sheet_without_uf_columns_names_the_file(spark, tmp_path):
+    bad = tmp_path / "SINAPI_Precos_sem_UF.csv"
+    bad.write_text(
+        "CODIGO DO INSUMO;DESCRICAO DO INSUMO;UNIDADE\n101;Cimento;kg\n",
+        encoding="utf-8",
+    )
+    pipe = SinapiPipeline(spark, str(tmp_path / "wh"), 2024, 1)
+    with pytest.raises(ValueError, match="SINAPI_Precos_sem_UF.csv"):
+        pipe.process_precos(str(bad), "NAO_DESONERADO")
+
+
+# -- status sync: the aggregate form equals the dedup + window form ------
+
+def _sync_status_window(pipe, catalog, manut, tipo):
+    """The status sync as a keyed dedup of the log plus a row_number
+    window over (data_referencia DESC, tipo_manutencao DESC)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from autosinapi_spark.operators.dedup import dedup_keep_first
+
+    log = dedup_keep_first(
+        manut,
+        ["item_codigo", "tipo_item", "data_referencia", "tipo_manutencao"],
+        ["descricao_item"],
+    )
+    w = Window.partitionBy("item_codigo").orderBy(
+        F.desc("data_referencia"), F.desc("tipo_manutencao")
+    )
+    latest = (
+        log.where(F.col("tipo_item") == tipo)
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .select(
+            F.col("item_codigo").alias("codigo"),
+            F.when(
+                F.upper("tipo_manutencao").contains(pipe.cfg.DEACTIVATION_KEYWORD),
+                F.lit("DESATIVADO"),
+            )
+            .otherwise(F.lit("ATIVO"))
+            .alias("__new_status"),
+        )
+    )
+    return catalog.join(latest, "codigo", "left").select(
+        *[c for c in catalog.columns if c != "status"],
+        F.coalesce("__new_status", "status").alias("status"),
+    )
+
+
+_EVENTS = st.lists(
+    st.tuples(
+        st.integers(0, 4),                                  # item_codigo
+        st.sampled_from(["INSUMO", "COMPOSICAO"]),          # tipo_item
+        st.sampled_from([None, "2024-01-01", "2024-02-01"]),
+        st.sampled_from(
+            [None, "ATIVAÇÃO", "DESATIVAÇÃO", "ALTERAÇÃO DE DESCRIÇÃO"]
+        ),
+        st.sampled_from(["a", "b"]),                        # descricao_item
+    ),
+    max_size=20,
+)
+_STATUSES = st.lists(
+    st.sampled_from([None, "ATIVO", "DESATIVADO"]), min_size=5, max_size=5
+)
+
+
+@given(events=_EVENTS, statuses=_STATUSES, tipo=st.sampled_from(["INSUMO", "COMPOSICAO"]))
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+def test_sync_status_matches_dedup_window_form(spark, events, statuses, tipo):
+    """Null dates, ATIVAÇÃO and DESATIVAÇÃO in one month, repeated
+    primary keys and events of the other item type all resolve as in
+    the dedup + row_number form."""
+    pipe = SinapiPipeline(spark, "unused", 2024, 1)
+    manut = spark.createDataFrame(
+        events or [],
+        "item_codigo BIGINT, tipo_item STRING, data_referencia STRING, "
+        "tipo_manutencao STRING, descricao_item STRING",
+    ).withColumn("data_referencia", F.col("data_referencia").cast("date"))
+    catalog = spark.createDataFrame(
+        [(c, f"item {c}", "UN", None, s) for c, s in enumerate(statuses)],
+        SINAPI_SCHEMAS["insumos"],
+    )
+    got = {tuple(r) for r in pipe._sync_status(catalog, manut, tipo).collect()}
+    want = {tuple(r) for r in _sync_status_window(pipe, catalog, manut, tipo).collect()}
+    assert got == want
+
+
+# -- fixed cost guards -------------------------------------------------------
+
+def _compilations(spark) -> int:
+    """Classes compiled by the JVM's whole-stage codegen so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_rerun_reuses_generated_classes(spark, csv_dir, tmp_path):
+    """The codegen cache holds a month's generated classes: once a month
+    and its re-run have run, another re-run in the same session compiles
+    almost none again. (The first re-run still compiles the plans that
+    populated tables add: AQE plans joins against empty tables apart.)
+    With a cache smaller than that working set, every re-run recompiles
+    about as many classes as the first load."""
+    wh = tmp_path / "wh"
+    c0 = _compilations(spark)
+    _run(spark, csv_dir, wh)
+    c1 = _compilations(spark)
+    _run(spark, csv_dir, wh)
+    c2 = _compilations(spark)
+    _run(spark, csv_dir, wh)
+    c3 = _compilations(spark)
+    assert c3 - c2 <= 0.1 * (c1 - c0), (c1 - c0, c2 - c1, c3 - c2)
+
+
+_UFS = (
+    "AC AL AP AM BA CE DF ES GO MA MT MS MG PA PB PR PE PI RJ RN RS RO RR SC "
+    "SP SE TO"
+).split()
+
+
+def _wide_sheets(tmp_path, ufs):
+    """A price sheet and a two-row-header cost sheet over ``ufs``."""
+    precos = tmp_path / f"precos_{len(ufs)}.csv"
+    precos.write_text(
+        "SINAPI - PREÇOS;\n"
+        "CODIGO DO INSUMO;DESCRICAO DO INSUMO;UNIDADE;" + ";".join(ufs) + "\n"
+        "101;Cimento;kg;" + ";".join("1,50" for _ in ufs) + "\n",
+        encoding="utf-8",
+    )
+    custos = tmp_path / f"custos_{len(ufs)}.csv"
+    custos.write_text(
+        ";;;" + "".join(f"{uf};;" for uf in ufs) + "\n"
+        "Código da Composição;Descrição;Unidade;" + "CUSTO;%;" * len(ufs) + "\n"
+        "Alvenaria (ref,9001);Alvenaria;m2;" + "10,00;50;" * len(ufs) + "\n",
+        encoding="utf-8",
+    )
+    return str(precos), str(custos)
+
+
+def test_plan_build_does_not_grow_with_sheet_width(spark, tmp_path, monkeypatch):
+    """Building the price and cost sheet transforms costs about the same
+    number of py4j calls for 3 UF columns as for 27."""
+    import gc
+
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    pipe = SinapiPipeline(spark, str(tmp_path / "wh"), 2024, 1)
+    real = cs.ClientServerConnection.send_command
+    # releases of Java objects that Python's collector frees are not
+    # plan-build calls, and land whenever the collector happens to run
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+    def build_calls(ufs):
+        precos, custos = _wide_sheets(tmp_path, ufs)
+        calls = []
+
+        def counting(self, command):
+            if not command.startswith(release):
+                calls.append(1)
+            return real(self, command)
+
+        gc.collect()
+        with monkeypatch.context() as m:
+            m.setattr(cs.ClientServerConnection, "send_command", counting)
+            pipe.process_precos(precos, "NAO_DESONERADO")
+            pipe.process_custos(custos, "NAO_DESONERADO")
+        return len(calls)
+
+    build_calls(_UFS[:3])  # warm-up: one-off lookups of the first build
+    narrow, wide = build_calls(_UFS[:3]), build_calls(_UFS)
+    assert narrow > 0
+    assert abs(wide - narrow) < 30, (narrow, wide)
+    # the sheets really are 3 and 27 UFs wide
+    _, long = pipe.process_precos(_wide_sheets(tmp_path, _UFS)[0], "NAO_DESONERADO")
+    assert long.select("uf").distinct().count() == 27

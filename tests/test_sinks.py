@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -81,6 +82,33 @@ def test_upsert_updates_only_incoming_columns(spark, tmp_path):
         2: ("B-NEW", "KG", "DESATIVADO"),  # status untouched by upsert
         3: ("C", None, "ATIVO"),  # new row gets DDL default
     }
+
+
+def test_upsert_raises_on_a_torn_table_and_keeps_its_files(spark, tmp_path):
+    """A table that exists but cannot be read is not an absent table:
+    the upsert must fail instead of overwriting it with the incoming
+    rows alone."""
+    path = str(tmp_path / "catalogo")
+    for row in [(1, "A", "UN", "ATIVO"), (2, "B", "KG", "ATIVO"), (5, "E", "M", "ATIVO")]:
+        _catalog(spark, [row]).coalesce(1).write.mode("append").parquet(path)
+    parts = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    assert len(parts) == 3
+    # tear the file that schema inference reads (the first by path):
+    # its footer is gone, the other two files are intact
+    first = os.path.join(path, parts[0])
+    with open(first, "r+b") as fh:
+        fh.truncate(os.path.getsize(first) // 2)
+    crc = os.path.join(path, f".{parts[0]}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    files = _files(path)
+
+    with pytest.raises(Exception) as err:
+        write_upsert(
+            spark, _catalog(spark, [(3, "C", "UN", "ATIVO")]), path, ["codigo"]
+        )
+    assert not isinstance(err.value, AnalysisException)
+    assert _files(path) == files
 
 
 def test_replace_period_touches_only_its_partition(spark, tmp_path):
